@@ -313,8 +313,8 @@ def _q_qf_metrics(spark, sf_dir):
     exercised by tests/test_pipeline.py and qf_pipeline_full)."""
     t = transcripts.load(spark, sf_dir)
     lab = pipeline.label_turns(t, CFG, with_models=False)
-    m = pipeline.metrics_table(lab, CFG, with_models=False,
-                               input_files=False)
+    m = pipeline.metrics_table(pipeline.with_lineage(lab, F.lit("<memory>")),
+                               CFG, with_models=False)
     return m.groupBy("ruleset_version").agg(
         F.sum("n_turns").cast("long").alias("n_turns"),
         F.sum("n_kept").cast("long").alias("n_kept"),
@@ -739,11 +739,8 @@ def _q_corpus_curation(spark, sf_dir):
     # lazy checkpoint runs the quality→dedup→stratify chain ONCE (the
     # pack_shards offsets job materializes it) instead of once per
     # consumer; ~24 B/row, bounded at any corpus size. n_tokens is the
-    # same whitespace-word count token_counts emits (rules.WS split).
-    n_tokens = F.coalesce(
-        F.size(F.filter(F.split(F.col("text"), rules.WS),
-                        lambda w: w != F.lit(""))),
-        F.lit(0)).cast("long")
+    # same whitespace-word count token_counts emits.
+    n_tokens = textstats.ws_token_count(F.col("text")).cast("long")
     tl = (s3.select("doc_id", "lang", n_tokens.alias("n_tokens"))
           .localCheckpoint(eager=False))
     packed = sampling.pack_shards(tl.select("doc_id", "n_tokens"),

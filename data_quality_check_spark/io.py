@@ -8,9 +8,10 @@ generalizes that into snapshot-style checkpointing:
 
   * input is a set of Parquet files (locally) or an Iceberg table's snapshot
     file list (on a cluster);
-  * work is committed in CHUNKS of input files: each chunk runs as one Spark
-    job writing its labeled output + its per-partition lineage/metrics rows,
-    then a manifest entry for the chunk is published ATOMICALLY (temp file +
+  * work is committed in CHUNKS of input files: each chunk runs ONE
+    labeling execution, persisted and read by every sink (labeled turns,
+    per-partition lineage/metrics rows, latency rows when timed), then a
+    manifest entry for the chunk is published ATOMICALLY (temp file +
     os.replace — the local stand-in for an Iceberg snapshot commit);
   * on restart, committed chunks are skipped by reading the manifest — so a
     killed job resumes with no duplicated and no missing (conv_id, turn_idx)
@@ -27,11 +28,14 @@ import hashlib
 import json
 import os
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import DEFAULT_RULESET, RuleSet
+from .operators import latency
 from .plans import pipeline
 
 MANIFEST_DIR = "_manifest"
@@ -92,6 +96,27 @@ class JobReport:
     files_processed: list[str]
 
 
+@contextmanager
+def _labeled_once(df: DataFrame, file_col, cfg: RuleSet,
+                  **label_kw) -> Iterator[DataFrame]:
+    """A chunk's one labeling execution: label_turns + lineage columns,
+    persisted so every sink reads the same scored rows (one crossing of
+    the Python scoring boundary per turn); unpersisted even on raise."""
+    labeled = pipeline.with_lineage(
+        pipeline.label_turns(df, cfg, **label_kw), file_col).persist()
+    try:
+        yield labeled
+    finally:
+        labeled.unpersist()
+
+
+def _turns(labeled: DataFrame, output_partitions: int | None) -> DataFrame:
+    """The turns sink: stable-ordered, without lineage or batch_us."""
+    return pipeline.stable_order(
+        labeled.drop("partition_id", "input_file", "batch_us"),
+        output_partitions)
+
+
 def run_job(
     spark: SparkSession,
     input_path: str,
@@ -135,50 +160,34 @@ def run_job(
 
     chunks = [todo[i:i + files_per_chunk]
               for i in range(0, len(todo), files_per_chunk)]
+    timed = measure_latency and with_models
     ran = 0
     processed: list[str] = []
     for chunk in chunks:
         chunk_id = hashlib.sha256("\n".join(chunk).encode()).hexdigest()[:16]
-        df = spark.read.parquet(*chunk)
-        timed = measure_latency and with_models
-        labeled = pipeline.label_turns(
-            df, cfg, with_models=with_models, bc_models=bc_models,
-            measure_latency=timed,
-            models_on_survivors=models_on_survivors)
-        persisted = None
-        if timed:
-            # Persist across the three consumers (latency, turns, metrics):
-            # without it the latency write triggers a SEPARATE scoring pass
-            # whose batch_us values would not correspond to the run that
-            # produced the committed output.
-            persisted = labeled.persist()
-            labeled = persisted
-            # D10 duration histogram: per-chunk scoring-latency percentiles
-            # (metrics.rs:22-25 analog) written next to the metrics table
-            from .operators import latency as lat
-
-            lat_rows = lat.percentiles(
-                labeled.select(F.spark_partition_id().alias("partition_id"),
-                               "batch_us"),
-                "batch_us", ("partition_id",))
-            lat_rows.write.mode("overwrite").parquet(
-                os.path.join(output_dir, "latency", f"chunk={chunk_id}"))
-            labeled = labeled.drop("batch_us")
-        out = pipeline.stable_order(labeled, output_partitions)
-        w = out.write.mode("overwrite")
-        if max_records_per_file:
-            # compaction control: output_partitions bounds file count from
-            # below (parallelism), maxRecordsPerFile from above (no
-            # gigantic files for downstream range readers)
-            w = w.option("maxRecordsPerFile", str(max_records_per_file))
-        w.parquet(
-            os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
-        metrics = pipeline.metrics_table(
-            labeled, cfg, with_models=with_models)
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(output_dir, "metrics", f"chunk={chunk_id}"))
-        if persisted is not None:
-            persisted.unpersist()
+        with _labeled_once(
+                spark.read.parquet(*chunk), F.col("_metadata.file_path"),
+                cfg, with_models=with_models, bc_models=bc_models,
+                measure_latency=timed,
+                models_on_survivors=models_on_survivors) as labeled:
+            if timed:
+                # D10 duration histogram (metrics.rs:22-25 analog) from the
+                # batches that labeled the committed output
+                latency.percentiles(
+                    labeled.select("partition_id", "batch_us"),
+                    "batch_us", ("partition_id",),
+                ).write.mode("overwrite").parquet(
+                    os.path.join(output_dir, "latency", f"chunk={chunk_id}"))
+            w = _turns(labeled, output_partitions).write.mode("overwrite")
+            if max_records_per_file:
+                # compaction control: output_partitions bounds file count
+                # from below (parallelism), maxRecordsPerFile from above
+                # (no gigantic files for downstream range readers)
+                w = w.option("maxRecordsPerFile", str(max_records_per_file))
+            w.parquet(os.path.join(output_dir, "turns", f"chunk={chunk_id}"))
+            pipeline.metrics_table(labeled, cfg, with_models=with_models) \
+                .write.mode("overwrite").parquet(
+                    os.path.join(output_dir, "metrics", f"chunk={chunk_id}"))
         if fail_before_commit is not None and ran + 1 >= fail_before_commit:
             raise RuntimeError(
                 f"injected failure before manifest commit of chunk {ran + 1}")
@@ -214,9 +223,10 @@ def run_job_iceberg(
     """Cluster path: Iceberg catalog tables end-to-end.
 
     Requires iceberg-spark-runtime on the cluster classpath (not available
-    in this sandbox — the parquet+manifest twin run_job() above executes the
-    IDENTICAL labeling plan and carries the tests; this function only swaps
-    the IO endpoints, per SURVEY §7 "Iceberg absence locally").
+    here — the parquet+manifest twin run_job() above runs the same
+    per-chunk labeling step (_labeled_once) and carries the tests; this
+    function only swaps the IO endpoints and the lineage file column, per
+    SURVEY §7 "Iceberg absence locally").
 
     Resume model: the processed high-water mark is the input table's
     snapshot id, recorded in `checkpoint_table` (conv-free control table
@@ -248,12 +258,13 @@ def run_job_iceberg(
     else:
         df = spark.read.table(input_table)
 
-    labeled = pipeline.label_turns(
-        df, cfg, with_models=with_models, bc_models=bc_models)
-    out = pipeline.stable_order(labeled, output_partitions)
-    out.writeTo(output_table).append()
-    pipeline.metrics_table(labeled, cfg, with_models=with_models) \
-        .writeTo(metrics_table).append()
+    # Iceberg's `_file` metadata column: `_metadata` exists only on
+    # Spark's own file sources
+    with _labeled_once(df, F.col("_file"), cfg, with_models=with_models,
+                       bc_models=bc_models) as labeled:
+        _turns(labeled, output_partitions).writeTo(output_table).append()
+        pipeline.metrics_table(labeled, cfg, with_models=with_models) \
+            .writeTo(metrics_table).append()
     if checkpoint_table is not None and current is not None:
         spark.createDataFrame(
             [(input_table, current, cfg.version)],

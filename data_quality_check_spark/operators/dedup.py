@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..models import hashing
+from .guards import barrier_filter
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -482,16 +483,10 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.7,
                 F.lit(0), lambda acc, v: acc + v,
             ).cast("double") / k).alias("est_jaccard"),
         )
-        # pushdown barrier (see plans/pipeline.ruleset_diff): without it
-        # the threshold filter is pushed below this projection with the
-        # whole interpreted zip_with/aggregate fold substituted in, so
-        # every surviving pair pays the 32-element HOF twice
-        .withColumn("_nd", F.spark_partition_id())
     )
-    return (scored.filter(
-        F.when(F.col("_nd") >= 0, F.col("est_jaccard") >= threshold)
-        .otherwise(F.lit(False)))
-        .select("doc_a", "doc_b", "est_jaccard"))
+    # barrier: otherwise every surviving pair pays the HOF fold twice
+    return (barrier_filter(scored, F.col("est_jaccard") >= threshold)
+            .select("doc_a", "doc_b", "est_jaccard"))
 
 
 # ---------------------------------------------------------------------------
@@ -910,13 +905,9 @@ def incremental_dedup_pairs(index: MinHashIndex, new_docs: DataFrame,
                 F.lit(0), lambda acc, v: acc + v,
             ).cast("double") / index.k).alias("est_jaccard"),
         )
-        # pushdown barrier — see minhash_lsh_pairs
-        .withColumn("_nd", F.spark_partition_id())
     )
-    return (scored.filter(
-        F.when(F.col("_nd") >= 0, F.col("est_jaccard") >= threshold)
-        .otherwise(F.lit(False)))
-        .select("new_doc", "corpus_doc", "est_jaccard"))
+    return (barrier_filter(scored, F.col("est_jaccard") >= threshold)
+            .select("new_doc", "corpus_doc", "est_jaccard"))
 
 
 def incremental_minhash_sql(corpus_where: str, new_where: str,

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import DEFAULT_RULESET, RuleSet
 from ..functions import rules
 from ..operators.dedup import normalize_text
+from ..operators.guards import barrier_filter
 
 
 # BPE-ish subword estimate: BPE pre-tokenizes into letter runs / digit
@@ -96,19 +97,25 @@ def bpe_token_estimate_sql(text_expr: str = "text") -> str:
        ELSE 1 END)) AS BIGINT), 0)"""
 
 
+def ws_token_count(text):
+    """Whitespace-token count (rules.WS split, empty pieces dropped; 0 for
+    NULL text) — token_counts' n_tokens and the corpus_curation gate's."""
+    return F.coalesce(
+        F.size(F.filter(F.split(text, rules.WS), lambda w: w != F.lit(""))),
+        F.lit(0))
+
+
 def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace tokens, BPE-ish pre-tokenization piece count (letter
     runs / digit runs / single symbols), and the subword-token estimate
     (bpe_token_estimate) — the budget unit for shard packing."""
     text = F.col(text_col)
-    words = F.filter(F.split(text, rules.WS), lambda w: w != F.lit(""))
     # one segmentation pass shared by n_pieces and the subword estimate
     # (the pieces regexp is the expensive part — own projection, same
     # rule as shingle_set)
     pre = docs.select("doc_id", text.alias("_t"),
                       _pieces(text).alias("_p"),
-                      F.coalesce(F.size(words), F.lit(0))
-                      .alias("n_tokens"))
+                      ws_token_count(text).alias("n_tokens"))
     return pre.select(
         "doc_id",
         F.coalesce(F.length("_t"), F.lit(0)).alias("n_chars"),
@@ -147,19 +154,10 @@ def quality_scores(docs: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
 def quality_pass_ids(docs: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
                      text_col: str = "text") -> DataFrame:
     """doc_ids passing the heuristic quality rules — the filter stage of
-    the curation chains, with the predicate-pushdown barrier.
-
-    `quality_scores(...).filter("passes")` lets PushDownPredicates
-    substitute the whole reasons expression into the filter, re-expanding
-    every feature inline (the text re-splits ~9x per row — same blowup
-    as plans/pipeline.ruleset_diff, where it measured 58 split()
-    occurrences). The non-deterministic `_nd` projection field pins the
-    filter above the shared feature projections so the split/translate
-    work runs once per row."""
-    q = (quality_scores(docs, cfg, text_col)
-         .withColumn("_nd", F.spark_partition_id()))
-    return (q.filter(F.when(F.col("_nd") >= 0, F.col("passes"))
-                     .otherwise(F.lit(False)))
+    the curation chains. A plain `filter("passes")` would re-split the
+    text ~9x per row (guards.barrier_filter)."""
+    return (barrier_filter(quality_scores(docs, cfg, text_col),
+                           F.col("passes"))
             .select("doc_id"))
 
 

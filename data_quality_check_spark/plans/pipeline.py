@@ -21,12 +21,13 @@ Scale design (100 TB / 10^12 turns):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..config import DEFAULT_RULESET, RuleSet
 from ..functions import rules
 from ..functions.scrub import scrub_column
 from ..functions.udfs import broadcast_models, make_scores_udf
+from ..operators.guards import barrier_filter
 
 FEATURE_NAMES = (
     "n_chars", "n_words", "n_lines", "mean_word_len", "max_word_len",
@@ -162,24 +163,6 @@ def label_turns(
     return out.select(*final_cols)
 
 
-def observe_labels(labeled: DataFrame, name: str = "qf"):
-    """Attach a Spark Observation to the labeled stream: keep/drop counts
-    collected DURING the job's own pass (no second action) — the in-flight
-    form of the reference's request counter (metrics.rs:17-21), complementing
-    the persisted metrics_table. Returns (df, observation); read
-    `observation.get` after an action completes."""
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    out = labeled.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_turns"),
-        F.count_if(F.col("keep")).alias("n_kept"),
-        F.count_if(~F.col("keep")).alias("n_dropped"),
-    )
-    return out, obs
-
-
 def conversation_filter(labeled: DataFrame,
                         max_drop_permille: int = 500) -> DataFrame:
     """Conversation-LEVEL keep decision over per-turn labels: a
@@ -242,28 +225,31 @@ def salted_repartition(df: DataFrame, buckets: int, turns_per_chunk: int = 4096,
     return parted
 
 
+def with_lineage(labeled: DataFrame, file_col: Column) -> DataFrame:
+    """The metrics lineage as narrow columns: `partition_id` and
+    `input_file` (`file_col`). Project them BEFORE a persist: derived on
+    top of the cached frame they change the plan, the cache misses, and
+    the sink re-scans and re-scores the input."""
+    return labeled.withColumns({
+        "partition_id": F.spark_partition_id(),
+        "input_file": file_col,
+    })
+
+
 def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
-                  *, with_models: bool = True,
-                  input_files: bool = True) -> DataFrame:
+                  *, with_models: bool = True) -> DataFrame:
     """Per-partition lineage + metrics — the batch analog of the reference's
     OTel counter/histogram report (/root/reference/data-quality-server/src/
     metrics.rs:11-31, emission json_validation.rs:44-83).
 
     One row per (partition, input file): turn counts, keep/drop counts and a
-    per-reason histogram map, tagged with the ruleset version.
+    per-reason histogram map, tagged with the ruleset version. `labeled`
+    carries the with_lineage() columns.
     """
     from ..config import REASONS
 
     reasons = [r for r in REASONS
                if with_models or r not in ("lang_conf", "perplexity")]
-    file_col = (F.col("_metadata.file_path") if input_files
-                else F.lit("<memory>"))
-    base = labeled.select(
-        F.spark_partition_id().alias("partition_id"),
-        file_col.alias("input_file"),
-        F.col("keep"),
-        F.col("drop_reasons"),
-    )
     aggs = [
         F.count(F.lit(1)).alias("n_turns"),
         F.count_if(F.col("keep")).alias("n_kept"),
@@ -276,7 +262,7 @@ def metrics_table(labeled: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
             F.count_if(F.array_contains("drop_reasons", r))
         )
     metrics = (
-        base.groupBy("partition_id", "input_file")
+        labeled.groupBy("partition_id", "input_file")
         .agg(*aggs, F.create_map(*reason_entries).alias("reason_counts"))
         .withColumn("ruleset_version", F.lit(cfg.version))
     )
@@ -318,24 +304,10 @@ def ruleset_diff(df: DataFrame, cfg_old: RuleSet, cfg_new: RuleSet,
         sides[tag] = reasons
     out = out.withColumn("_r_old", sides["old"])
     out = out.withColumn("_r_new", sides["new"])
-    # The flip filter must NOT be pushed below the _r_/_f_ projections:
-    # PushDownPredicates substitutes aliases while pushing, so the pushed
-    # condition re-expands EVERY feature (split/translate/HOF) inline —
-    # measured 58 split() occurrences vs 2 in the unfiltered plan, i.e.
-    # the text re-splits ~20x per row inside one filter. Predicates (even
-    # non-deterministic ones) push through any all-deterministic Project,
-    # so the barrier must live in the PROJECT FIELDS: `_nd` is a
-    # non-deterministic column (spark_partition_id, identically >= 0)
-    # that the filter references — the projection holding it can then
-    # never host a pushed-through predicate, the filter stays on top,
-    # and every feature evaluates once per row from its shared
-    # projection. Nothing downstream needs scan-level pushdown (the
-    # derivation is narrow and reads every row regardless).
-    out = out.withColumn("_nd", F.spark_partition_id())
+    # the flip filter must stay above the shared _r_/_f_ projections
     flips = (F.size("_r_old") == 0) != (F.size("_r_new") == 0)
     return (
-        out.filter(F.when(F.col("_nd") >= 0, flips)
-                   .otherwise(F.lit(False)))
+        barrier_filter(out, flips)
         .select(
             "conv_id", "turn_idx",
             (F.size("_r_old") == 0).alias("keep_old"),

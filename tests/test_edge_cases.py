@@ -3,6 +3,8 @@ the shapes a 100 TB pipeline inevitably sees in some partition."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from data_quality_check_spark import io as dq_io
 from data_quality_check_spark.operators import dedup, similarity, textstats
 from data_quality_check_spark.plans import pipeline
@@ -29,7 +31,8 @@ def test_label_turns_empty_with_models(spark, bc_models):
 
 def test_metrics_table_empty(spark):
     lab = pipeline.label_turns(_empty(spark), with_models=False)
-    m = pipeline.metrics_table(lab, with_models=False, input_files=False)
+    m = pipeline.metrics_table(pipeline.with_lineage(lab, F.lit("<memory>")),
+                               with_models=False)
     assert m.count() == 0
 
 

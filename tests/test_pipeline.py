@@ -69,7 +69,8 @@ def test_skewed_conversation_spreads_under_salt(spark):
 
 def test_metrics_table_consistency(spark, transcripts_tiny):
     lab = pipeline.label_turns(transcripts_tiny, with_models=False)
-    m = pipeline.metrics_table(lab, with_models=False, input_files=False)
+    m = pipeline.metrics_table(pipeline.with_lineage(lab, F.lit("<memory>")),
+                               with_models=False)
     tot = m.agg(F.sum("n_turns"), F.sum("n_kept"), F.sum("n_dropped")).first()
     n = transcripts_tiny.count()
     assert tot[0] == n
@@ -84,17 +85,6 @@ def test_metrics_table_consistency(spark, transcripts_tiny):
     }
     for r in hist:
         assert r["n"] == direct.get(r["reason"], 0)
-
-
-def test_observe_labels_inflight_counts(spark, transcripts_tiny):
-    lab = pipeline.label_turns(transcripts_tiny, with_models=False)
-    observed, obs = pipeline.observe_labels(lab)
-    n = observed.count()  # one action; metrics ride along
-    got = obs.get
-    assert got["n_turns"] == n
-    assert got["n_kept"] + got["n_dropped"] == n
-    direct = lab.filter("keep").count()
-    assert got["n_kept"] == direct
 
 
 def test_keep_features_columns(spark, transcripts_tiny):
@@ -114,7 +104,9 @@ def test_lineage_covers_input_files(spark, tmp_path):
     ).repartition(3).write.parquet(src)
     df = spark.read.parquet(src)
     lab = pipeline.label_turns(df, with_models=False)
-    m = pipeline.metrics_table(lab, with_models=False, input_files=True)
+    m = pipeline.metrics_table(
+        pipeline.with_lineage(lab, F.col("_metadata.file_path")),
+        with_models=False)
     files = {r[0] for r in m.select("input_file").collect()}
     assert files  # real file paths captured via _metadata
     assert all(f.startswith("file:") or f.startswith("/") for f in files)

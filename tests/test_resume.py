@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_quality_check_spark import io as dq_io
+from data_quality_check_spark.plans import pipeline
 
 
 @pytest.fixture()
@@ -120,3 +121,72 @@ def test_max_records_per_file_bounds_output_files(spark, tmp_path, src):
     # 200 rows / <=50 per file -> at least 4 files even at 1 partition
     assert len(files) >= 4
     assert dq_io.read_output(spark, out).count() == 200
+
+
+def _scored_rows(spark, run) -> int:
+    """Rows out of every ArrowEvalPython (scoring UDF) node across the SQL
+    executions `run()` starts, read from the SQL status store (populated
+    with the UI disabled too)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        it = store.executionsList().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next().executionId())
+        return ids
+
+    before = execution_ids()
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    n = 0
+    for eid in execution_ids() - before:
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes().iterator()
+        while nodes.hasNext():
+            node = nodes.next()
+            if node.name() != "ArrowEvalPython":
+                continue
+            metrics = node.metrics().iterator()
+            while metrics.hasNext():
+                m = metrics.next()
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    n += int(v.get().replace(",", ""))
+    return n
+
+
+@pytest.mark.parametrize("measure_latency", [False, True])
+def test_one_scoring_pass_per_turn(spark, tmp_path, src, bc_models,
+                                   measure_latency):
+    """Every sink of a chunk (turns, metrics, latency) reads ONE labeling
+    execution: each input turn crosses the scoring boundary exactly once."""
+    out = str(tmp_path / "out")
+    scored = _scored_rows(spark, lambda: dq_io.run_job(
+        spark, src, out, bc_models=bc_models, files_per_chunk=4,
+        measure_latency=measure_latency))
+    assert scored == 200
+    assert dq_io.read_output(spark, out).count() == 200
+
+
+def test_metrics_rows_match_rescan_lineage(spark, tmp_path, src, bc_models):
+    """The lineage columns projected before the persist give the same
+    per-(partition, file) rows as spark_partition_id() and
+    _metadata.file_path derived over a fresh scan of the chunk."""
+    out = str(tmp_path / "out")
+    dq_io.run_job(spark, src, out, bc_models=bc_models, files_per_chunk=100)
+    chunk = dq_io.read_manifest(out)[0]["input_files"]
+    lab = pipeline.label_turns(spark.read.parquet(*chunk),
+                               bc_models=bc_models)
+    want = pipeline.metrics_table(lab.select(
+        F.spark_partition_id().alias("partition_id"),
+        F.col("_metadata.file_path").alias("input_file"),
+        "keep", "drop_reasons"))
+
+    def rows(df):
+        return sorted((r.asDict(recursive=True) for r in df.collect()),
+                      key=lambda d: (d["partition_id"], d["input_file"]))
+
+    got = rows(dq_io.read_metrics(spark, out).drop("chunk"))
+    assert len(got) > 1
+    assert got == rows(want)
