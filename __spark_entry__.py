@@ -726,8 +726,7 @@ def _q_corpus_curation(spark, sf_dir):
 
     _docs(spark, sf_dir).createOrReplaceTempView("documents")
     d = spark.sql(CURATION_FIXTURE_SQL)
-    q = textstats.quality_pass_ids(d, CFG)
-    s1 = d.join(q, "doc_id")
+    s1 = textstats.quality_filter(d, CFG)
     w = Window.partitionBy(
         F.md5(dedup.normalize_text(F.col("text")))).orderBy("doc_id")
     s2 = (s1.withColumn("_rn", F.row_number().over(w))

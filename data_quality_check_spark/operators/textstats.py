@@ -125,20 +125,25 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _heuristics(docs: DataFrame, cfg: RuleSet, text_col: str):
+    """(docs + the split_columns arrays, features over them, the
+    fail-reasons array) — the shared word/line arrays materialized once
+    per row, same as the pipeline's label_turns; the single-expression
+    feature form re-runs the split per consuming feature."""
+    text = F.col(text_col)
+    wide = docs.withColumns(rules.split_columns(text))
+    feats = rules.feature_columns_from(text, F.col("_words"),
+                                       F.col("_lines"))
+    return wide, feats, rules.reasons_array(
+        rules.heuristic_flags(feats, text, cfg))
+
+
 def quality_scores(docs: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
                    text_col: str = "text") -> DataFrame:
     """Per-document heuristic quality features + pass/fail flag, reusing the
-    transcript rule expressions verbatim — with the shared word/line
-    arrays materialized once per row (split_columns), same as the
-    pipeline's label_turns; the single-expression feature form re-runs
-    the split per consuming feature."""
-    text = F.col(text_col)
-    docs = docs.withColumns(rules.split_columns(text))
-    feats = rules.feature_columns_from(text, F.col("_words"),
-                                       F.col("_lines"))
-    flags = rules.heuristic_flags(feats, text, cfg)
-    reasons = rules.reasons_array(flags)
-    return docs.select(
+    transcript rule expressions verbatim (_heuristics)."""
+    wide, feats, reasons = _heuristics(docs, cfg, text_col)
+    return wide.select(
         "doc_id",
         feats["n_words"].alias("n_words"),
         feats["n_chars"].alias("n_chars"),
@@ -151,14 +156,23 @@ def quality_scores(docs: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
     )
 
 
+def quality_filter(docs: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
+                   text_col: str = "text") -> DataFrame:
+    """The rows of `docs` passing the heuristic quality rules, every input
+    column kept — the filter stage of the curation chains: one scan, no
+    self-join, each row judged on its own (a `doc_id` seen k times gives
+    one row per passing copy). A plain filter on the reasons would
+    re-split the text ~9x per row (guards.barrier_filter)."""
+    wide, _, reasons = _heuristics(docs, cfg, text_col)
+    flagged = wide.select(*docs.columns, reasons.alias("_reasons"))
+    return (barrier_filter(flagged, F.size("_reasons") == 0)
+            .select(*docs.columns))
+
+
 def quality_pass_ids(docs: DataFrame, cfg: RuleSet = DEFAULT_RULESET,
                      text_col: str = "text") -> DataFrame:
-    """doc_ids passing the heuristic quality rules — the filter stage of
-    the curation chains. A plain `filter("passes")` would re-split the
-    text ~9x per row (guards.barrier_filter)."""
-    return (barrier_filter(quality_scores(docs, cfg, text_col),
-                           F.col("passes"))
-            .select("doc_id"))
+    """doc_ids passing the heuristic quality rules (quality_filter)."""
+    return quality_filter(docs, cfg, text_col).select("doc_id")
 
 
 def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -197,6 +211,19 @@ def langid_table(docs: DataFrame, bc_models, text_col: str = "text") -> DataFram
     )
 
 
+def _quality_scored(docs: DataFrame, bc_models, text_col: str,
+                    threshold: float | None) -> DataFrame:
+    """`docs` + `_q` (learned quality probability) + `_keep` (`_q` at or
+    above `threshold`, default quality.THRESHOLD)."""
+    from ..functions.udfs import make_quality_udf
+    from ..models import quality
+
+    thr = quality.THRESHOLD if threshold is None else threshold
+    qs = make_quality_udf(bc_models)
+    return (docs.withColumn("_q", qs(F.col(text_col)))
+            .withColumn("_keep", F.col("_q") >= F.lit(float(thr))))
+
+
 def quality_model_table(docs: DataFrame, bc_models,
                         text_col: str = "text",
                         threshold: float | None = None) -> DataFrame:
@@ -204,16 +231,19 @@ def quality_model_table(docs: DataFrame, bc_models,
     (models/quality.py): (doc_id, q_score, keep_quality). The primary
     gate of CCNet/FineWeb-style pipelines — a broadcast linear model over
     hashed trigrams, scored batch-at-a-time with zero per-row Python."""
-    from ..functions.udfs import make_quality_udf
-    from ..models import quality
+    return _quality_scored(docs, bc_models, text_col, threshold).select(
+        "doc_id", F.col("_q").alias("q_score"),
+        F.col("_keep").alias("keep_quality"))
 
-    thr = quality.THRESHOLD if threshold is None else threshold
-    qs = make_quality_udf(bc_models)
-    return (
-        docs.withColumn("_q", qs(F.col(text_col)))
-        .select("doc_id", F.col("_q").alias("q_score"),
-                (F.col("_q") >= F.lit(float(thr))).alias("keep_quality"))
-    )
+
+def quality_model_filter(docs: DataFrame, bc_models,
+                         text_col: str = "text",
+                         threshold: float | None = None) -> DataFrame:
+    """The rows of `docs` the learned quality classifier keeps
+    (quality_model_table's keep_quality), every input column kept. The
+    barrier stops the filter from scoring each row a second time."""
+    scored = _quality_scored(docs, bc_models, text_col, threshold)
+    return barrier_filter(scored, F.col("_keep")).select(*docs.columns)
 
 
 def score_buckets(scored: DataFrame, n_buckets: int = 10,

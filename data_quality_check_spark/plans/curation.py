@@ -4,7 +4,9 @@ oracle-checks this exact composition end to end).
 
 Stages, each an already-oracled public operator, each optional:
 
-  1. heuristic quality filter        (textstats.quality_scores)
+  1. heuristic quality filter        (textstats.quality_filter; then
+                                      textstats.quality_model_filter
+                                      when a model is given)
   2. host extraction + blocklist +
      per-domain doc caps             (operators/domains.py)
   3. span-level dedup                (dedup.dedup_spans — content-defined
@@ -15,8 +17,14 @@ Stages, each an already-oracled public operator, each optional:
                                       sampling.pack_shards)
 
 Everything stays one lazy DataFrame chain except the documented
-materialization points inside the operators (span table checkpoint,
-pack_shards offsets).
+materialization points: the span table checkpoint and pack_shards
+offsets inside the operators, and two lazy checkpoints here, each placed
+where its frame gains a second consumer — the filtered, domain-capped
+docs before span dedup (read by the span checkpoint, dedup_spans'
+doc_id join-back and the text join-back), and the token-counted table
+before shard packing. So each stage runs once per job: every surviving
+doc crosses the quality model's Python boundary once, and the input is
+scanned once.
 """
 
 from __future__ import annotations
@@ -53,17 +61,11 @@ def curate_corpus(
     heuristic stage, the CCNet/FineWeb gate order (cheap rules first,
     model score second, dedup last)."""
     from ..operators import dedup, domains, sampling, textstats
-    from ..operators.guards import barrier_filter
 
-    q = textstats.quality_pass_ids(docs, cfg)
-    cur = docs.join(q, "doc_id")
-
+    cur = textstats.quality_filter(docs, cfg)
     if quality_model_bc is not None:
-        qm = textstats.quality_model_table(
-            cur, quality_model_bc, threshold=min_quality)
-        # barrier: otherwise each survivor pays the quality model twice
-        keep = barrier_filter(qm, F.col("keep_quality")).select("doc_id")
-        cur = cur.join(keep, "doc_id")
+        cur = textstats.quality_model_filter(cur, quality_model_bc,
+                                             threshold=min_quality)
 
     if blocked_hosts is not None or domain_cap is not None:
         cur = domains.with_host(cur)
@@ -74,6 +76,11 @@ def curate_corpus(
 
     text_col = "text"
     if span_dedup:
+        # dedup_spans' eager span checkpoint, its own doc_id join-back and
+        # the text join below all read `cur`: a lazy checkpoint runs the
+        # quality→model→domains chain ONCE (the span checkpoint
+        # materializes it) instead of once per consumer
+        cur = cur.localCheckpoint(eager=False)
         sd = dedup.dedup_spans(cur.select("doc_id", "text"))
         cur = (cur.drop("text")
                .join(sd.select("doc_id", "text_deduped"), "doc_id"))
@@ -86,8 +93,8 @@ def curate_corpus(
     if budget:
         # single-pass tail (r6): pack_shards' offsets job and the final
         # join-back both consume the curated table — a lazy checkpoint
-        # runs the quality→domains→span-dedup→stratify chain ONCE (the
-        # offsets job materializes it) instead of once per consumer.
+        # runs the chain above it ONCE (the offsets job materializes it)
+        # instead of once per consumer.
         # Same discipline as the operators' own multi-consumer
         # intermediates (dedup_spans' span table).
         t = cur.withColumn(

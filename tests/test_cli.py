@@ -87,3 +87,33 @@ def test_curate_quality_model_stage(spark, bc_models):
     # exactly the injected junk docs (that survived the heuristics) go
     assert all(d % 19 == 0 for d in dropped)
     assert all(d % 19 != 0 for d in kept)
+
+
+def test_curate_scores_each_survivor_once(spark, bc_models):
+    """One curate job runs its quality → model → domains chain once: span
+    dedup's reads of the filtered docs and shard packing share one
+    materialization, so each heuristic survivor crosses the quality
+    model's Python boundary once and the input is scanned once."""
+    from pyspark.sql import functions as F
+
+    from data_quality_check_spark.operators import textstats
+    from data_quality_check_spark.plans import curation
+    from conftest import SF_TINY
+    from sql_metrics import output_rows
+
+    docs = spark.read.parquet(f"{SF_TINY}/documents.parquet").withColumn(
+        "url", F.concat(F.lit("https://h"), F.col("doc_id") % 3,
+                        F.lit(".com/p")))
+    n_docs = docs.count()
+    survivors = textstats.quality_pass_ids(docs).count()
+    # the domain cap's shuffle makes AQE run the chain inside the lazy
+    # checkpoint's own execution; without a shuffle there, the status
+    # store credits the chain's operators to no execution and reads 0
+    rows = output_rows(spark, lambda: curation.curate_corpus(
+        docs, domain_cap=100, span_dedup=True, budget=4096,
+        quality_model_bc=bc_models).collect())
+    scanned = sum(n for node, n in rows.items()
+                  if node.startswith("Scan parquet"))
+    assert 0 < survivors < n_docs
+    assert rows["ArrowEvalPython"] == survivors
+    assert scanned == n_docs

@@ -212,3 +212,37 @@ def test_quality_pass_ids_equals_filtered_scores(spark):
     ref = {r[0] for r in textstats.quality_scores(docs)
            .filter("passes").select("doc_id").collect()}
     assert fast == ref and len(fast) > 0
+    # the one-scan filter keeps the self-join form's rows and columns
+    kept = textstats.quality_filter(docs)
+    joined = docs.join(textstats.quality_pass_ids(docs), "doc_id")
+    assert kept.columns == joined.columns
+    assert sorted(kept.collect()) == sorted(joined.collect())
+    # one scan, and the split arrays are computed once, not re-expanded
+    # in the filter
+    qe = kept._jdf.queryExecution()
+    assert qe.optimizedPlan().toString().count("split(") == 2
+    assert qe.executedPlan().toString().count("FileScan") == 1
+
+
+def test_quality_filter_keeps_each_row_of_a_repeated_doc_id(spark):
+    """The filter judges each row: a doc_id with k passing copies and one
+    failing copy gives k rows. The self-join form gave k rows for every
+    copy, the failing one included."""
+    from pyspark.sql import functions as F
+
+    from data_quality_check_spark.operators import textstats
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    ids = [r[0] for r in textstats.quality_pass_ids(docs).limit(1).collect()]
+    one = docs.filter(F.col("doc_id") == ids[0])
+    k = 3
+    junk = one.withColumn("text", F.lit("$$$ ### @@@"))
+    rep = one
+    for _ in range(k - 1):
+        rep = rep.unionByName(one)
+    rep = rep.unionByName(junk)
+    out = textstats.quality_filter(rep).collect()
+    assert len(out) == k
+    assert rep.join(textstats.quality_pass_ids(rep), "doc_id").count() \
+        == k * (k + 1)
+    assert {r["text"] for r in out} == {one.first()["text"]}

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from data_quality_check_spark import io as dq_io
 from data_quality_check_spark.plans import pipeline
+from sql_metrics import scored_rows
 
 
 @pytest.fixture()
@@ -123,46 +124,13 @@ def test_max_records_per_file_bounds_output_files(spark, tmp_path, src):
     assert dq_io.read_output(spark, out).count() == 200
 
 
-def _scored_rows(spark, run) -> int:
-    """Rows out of every ArrowEvalPython (scoring UDF) node across the SQL
-    executions `run()` starts, read from the SQL status store (populated
-    with the UI disabled too)."""
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def execution_ids():
-        it = store.executionsList().iterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(it.next().executionId())
-        return ids
-
-    before = execution_ids()
-    run()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    n = 0
-    for eid in execution_ids() - before:
-        values = store.executionMetrics(eid)
-        nodes = store.planGraph(eid).allNodes().iterator()
-        while nodes.hasNext():
-            node = nodes.next()
-            if node.name() != "ArrowEvalPython":
-                continue
-            metrics = node.metrics().iterator()
-            while metrics.hasNext():
-                m = metrics.next()
-                v = values.get(m.accumulatorId())
-                if m.name() == "number of output rows" and v.isDefined():
-                    n += int(v.get().replace(",", ""))
-    return n
-
-
 @pytest.mark.parametrize("measure_latency", [False, True])
 def test_one_scoring_pass_per_turn(spark, tmp_path, src, bc_models,
                                    measure_latency):
     """Every sink of a chunk (turns, metrics, latency) reads ONE labeling
     execution: each input turn crosses the scoring boundary exactly once."""
     out = str(tmp_path / "out")
-    scored = _scored_rows(spark, lambda: dq_io.run_job(
+    scored = scored_rows(spark, lambda: dq_io.run_job(
         spark, src, out, bc_models=bc_models, files_per_chunk=4,
         measure_latency=measure_latency))
     assert scored == 200
